@@ -28,6 +28,7 @@ against it deliberately, not via import luck.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 import numpy as np
@@ -86,7 +87,7 @@ def _segment_sums(gathered: np.ndarray, sorted_doc_ids: np.ndarray, n_docs: int)
     return out
 
 
-@dataclass
+@dataclass(frozen=True)
 class LangIdModel:
     """Hashed char-trigram NB classifier; ``weights`` is (N_BUCKETS, L)."""
 
@@ -113,7 +114,7 @@ class LangIdModel:
         return best, margin
 
 
-@dataclass
+@dataclass(frozen=True)
 class BigramLM:
     """Character-bigram LM; ``logp`` is (N_BUCKETS,) log-probability."""
 
@@ -145,6 +146,15 @@ def _training_text(lang: str, rng: np.random.Generator) -> list[str]:
     return docs
 
 
+def _read_only(a: np.ndarray) -> np.ndarray:
+    a.setflags(write=False)
+    return a
+
+
+# Both models depend only on ``seed``, so each is trained once per seed
+# and process; the cached instance is shared by every caller, which is
+# why its arrays are read-only.
+@functools.cache
 def build_langid_model(seed: int = 7) -> LangIdModel:
     """Train the NB trigram model on deterministic synthetic text."""
     from data_curator_spark.pipeline.corpus import LANGS
@@ -158,9 +168,10 @@ def build_langid_model(seed: int = 7) -> LangIdModel:
         np.add.at(counts[:, li], buckets, 1.0)
     weights = np.log(counts / counts.sum(axis=0, keepdims=True)).astype(np.float32)
     priors = np.zeros(len(LANGS), dtype=np.float32)
-    return LangIdModel(langs=LANGS, weights=weights, priors=priors)
+    return LangIdModel(langs=LANGS, weights=_read_only(weights), priors=_read_only(priors))
 
 
+@functools.cache
 def build_bigram_lm(seed: int = 11) -> BigramLM:
     """Train the char-bigram LM on the union of all languages' clean text."""
     from data_curator_spark.pipeline.corpus import LANGS
@@ -173,4 +184,4 @@ def build_bigram_lm(seed: int = 11) -> BigramLM:
         buckets, _ = _ngram_buckets(codes, lens, 2)
         np.add.at(counts, buckets, 1.0)
     logp = (np.log2(counts) - np.log2(counts.sum())).astype(np.float32)
-    return BigramLM(logp=logp)
+    return BigramLM(logp=_read_only(logp))

@@ -28,6 +28,15 @@ reader sees. That buys, exactly like Iceberg's metadata architecture:
   history and reclaims exactly the runs it unreferenced, ``vacuum``
   removes never-committed orphans.
 
+Commit path: every writer here (``run_pipeline_mvcc``, ``compact``)
+runs the runner's ``RunCommit`` — one manifest read at the start, a
+bucket-clustered write of immutable ``run_id=<id>/bucket=<b>``
+partitions with the lineage totals observed on the write pass, an
+integrity gate that re-reads only this run's directory, and an
+Arrow-built append of the entry and snapshot rows whose totals are the
+parent state plus this run's buckets. Both layouts therefore share one
+integrity contract and one snapshot-summary rule.
+
 Scale notes: the reader's (run_id, bucket) selection is collected from
 the manifest (≤ n_buckets rows) and compiled into a partition-literal
 predicate, so the scan PRUNES to exactly the selected directories — no
@@ -39,45 +48,24 @@ from __future__ import annotations
 
 import shutil
 import time
-import uuid
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_curator_spark.pipeline.runner import (
     OUTPUT_COLS,
+    RunCommit,
     _entries_path,
-    _latest_manifest_rows,
+    _manifest_exists,
+    _read_manifest,
+    _recover_swap,
     _snapshots_path,
-    attach_lineage_observation,
-    commit_bucket_metrics,
-    completed_buckets,
-    latest_snapshot_id,
+    latest_entries,
     with_bucket,
 )
 from data_curator_spark.pipeline.stages import run_stages
-
-
-def _recover_swap(path: str) -> None:
-    """Crash recovery for ``_swap_rewrite``: a crash between its two
-    renames leaves the table ABSENT at ``path`` with only
-    ``<path>__old`` on disk. Rename the old table back into place so
-    every reader — and a retried expire — proceeds automatically
-    instead of raising AnalysisException until a human intervenes."""
-    import os
-
-    local = path[len("file:"):] if path.startswith("file:") else path
-    old = f"{local}__old"
-    if not os.path.exists(local) and os.path.isdir(old):
-        os.rename(old, local)
-
-
-def _read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """All manifest reads funnel through here so a crashed swap-rewrite
-    self-heals before the read (see _recover_swap)."""
-    _recover_swap(path)
-    return spark.read.parquet(path)
 
 
 def _read_data(
@@ -125,17 +113,25 @@ def _selection_predicate(pairs: list[tuple[str, int]]):
     return pred
 
 
+def _pairs(latest: dict) -> list[tuple[str, int]]:
+    return [(e["run_id"], b) for b, e in latest.items()]
+
+
 def _current_pairs(spark: SparkSession, manifest_path: str) -> list[tuple[str, int]]:
-    rows = _latest_manifest_rows(spark, manifest_path).select("run_id", "bucket").collect()
-    return [(r["run_id"], int(r["bucket"])) for r in rows]
+    return _pairs(latest_entries(spark, manifest_path))
+
+
+def _read_selection(
+    spark: SparkSession, output_path: str, pairs: list[tuple[str, int]]
+) -> DataFrame:
+    df = _read_data(spark, output_path, pairs)
+    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
 
 
 def read_current(spark: SparkSession, output_path: str, manifest_path: str) -> DataFrame:
     """The table's CURRENT state: latest committed version of every
     bucket, resolved from the manifest, partition-pruned scan."""
-    pairs = _current_pairs(spark, manifest_path)
-    df = _read_data(spark, output_path, pairs)
-    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
+    return _read_selection(spark, output_path, _current_pairs(spark, manifest_path))
 
 
 def _pairs_as_of(
@@ -148,30 +144,14 @@ def _pairs_as_of(
     snap = snaps.filter(F.col("snapshot_id") == snapshot_id).collect()
     if not snap:
         raise ValueError(f"unknown snapshot_id {snapshot_id!r}")
-    cutoff = snap[0]["committed_at"]
-    m = (
-        _read_manifest(spark, _entries_path(manifest_path))
-        .filter((F.col("status") == "done") & (F.col("committed_at") <= cutoff))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bucket").orderBy(F.desc("committed_at"), F.desc("run_id"))
-    rows = (
-        m.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .select("run_id", "bucket")
-        .collect()
-    )
-    return [(r["run_id"], int(r["bucket"])) for r in rows]
+    return _pairs(latest_entries(spark, manifest_path, cutoff=snap[0]["committed_at"]))
 
 
 def read_snapshot(
     spark: SparkSession, output_path: str, manifest_path: str, snapshot_id: str
 ) -> DataFrame:
     """Time travel: the table as of ``snapshot_id``."""
-    pairs = _pairs_as_of(spark, manifest_path, snapshot_id)
-    df = _read_data(spark, output_path, pairs)
-    return df.filter(_selection_predicate(pairs)) if pairs else df.limit(0)
+    return _read_selection(spark, output_path, _pairs_as_of(spark, manifest_path, snapshot_id))
 
 
 def snapshot_diff(
@@ -249,66 +229,27 @@ def compact(
     them, exactly like Iceberg's rewrite + expire split.
 
     Scale shape: one partition-pruned scan of the live selection, one
-    sorted write — no shuffle beyond the write's ``sortWithinPartitions``
-    — and the manifest commit reuses the same observe-gated integrity
-    path as a normal run.
+    write rebalanced by bucket (one file per bucket unless AQE splits a
+    large one), and the manifest commit runs the same observe-gated
+    ``RunCommit`` path as a normal run.
     """
-    # "r" prefix: a bare hex id like "8463e2231577" parses as a DOUBLE
-    # in scientific notation, and when EVERY run_id= directory name is
-    # number-parseable, partition-type inference flips the column to
-    # DOUBLE and string comparisons throw under ANSI (observed flake)
-    run_id = "r" + uuid.uuid4().hex[:11]
-    t0 = time.time()
-    pairs = _current_pairs(spark, manifest_path)
+    run = RunCommit(spark, output_path, manifest_path, run_partition=True)
+    pairs = _pairs(run.latest)
     if not pairs:
         raise ValueError("compact: empty manifest — nothing to compact")
-    parent_snapshot = latest_snapshot_id(spark, manifest_path)
-    runs_before = sorted({r for r, _ in pairs})
-    buckets = sorted({b for _, b in pairs})
+    buckets = sorted(run.latest)
 
-    current = read_current(spark, output_path, manifest_path).drop("run_id")
+    current = _read_selection(spark, output_path, pairs).drop("run_id")
     result = current.select("bucket", *[c for c in OUTPUT_COLS if c in current.columns])
-    observation, result = attach_lineage_observation(result, run_id)
-    (
-        result.withColumn("run_id", F.lit(run_id))
-        .sortWithinPartitions("bucket", "repo", "path")
-        .write.partitionBy("run_id", "bucket")
-        .mode("append")
-        .parquet(output_path)
-    )
-    written = spark.read.parquet(output_path).filter(F.col("run_id") == run_id)
-    commit_bucket_metrics(spark, observation, written, buckets, run_id, t0, manifest_path)
-
-    totals = (
-        _latest_manifest_rows(spark, manifest_path)
-        .agg(F.sum("rows").alias("rows"), F.sum("kept").alias("kept"))
-        .collect()[0]
-    )
-    snapshot = spark.createDataFrame(
-        [
-            (
-                run_id, parent_snapshot, "compact", len(buckets), 0,
-                int(totals["rows"] or 0), int(totals["kept"] or 0),
-                float(time.time()),
-            )
-        ],
-        "snapshot_id string, parent_snapshot_id string, operation string, "
-        "buckets_processed int, buckets_skipped int, rows_total long, "
-        "rows_kept long, committed_at double",
-    )
-    snapshot.write.mode("append").parquet(_snapshots_path(manifest_path))
+    summary = run.commit(run.write(result), buckets, "compact", 0)
     return {
-        "run_id": run_id,
-        "snapshot_id": run_id,
-        "operation": "compact",
-        "runs_compacted": len(runs_before),
+        **summary,
+        "runs_compacted": len({r for r, _ in pairs}),
         "buckets": len(buckets),
-        "rows_total": int(totals["rows"] or 0),
-        "elapsed_sec": time.time() - t0,
     }
 
 
-def _swap_rewrite(spark: SparkSession, rows: list, schema, path: str) -> None:
+def _swap_rewrite(spark: SparkSession, rows: list[Row], schema, path: str) -> None:
     """Rewrite a (driver-small) manifest table via write-to-temp + rename
     swap instead of mode('overwrite')'s delete-then-write — a crash mid-
     overwrite would leave NO manifest at all, while a crash between the
@@ -325,7 +266,12 @@ def _swap_rewrite(spark: SparkSession, rows: list, schema, path: str) -> None:
     for stale in (tmp, old):
         if os.path.isdir(stale):
             shutil.rmtree(stale)
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+    # an Arrow table typed by the table's own schema: nulls and 64-bit
+    # ints stay exact, and no Python worker builds the rows
+    table = pa.Table.from_pylist(
+        [r.asDict(recursive=True) for r in rows], schema=to_arrow_schema(schema)
+    )
+    spark.createDataFrame(table).coalesce(1).write.parquet(tmp)
     os.rename(local, old)
     os.rename(tmp, local)
     shutil.rmtree(old)
@@ -375,8 +321,6 @@ def expire_snapshots(
     ]
     # schemas come from the tables as READ (never a hardcoded copy —
     # a manifest column added later must survive expiry untouched)
-    entry_fields = entries_df.schema.fieldNames()
-    snap_fields = snaps_df.schema.fieldNames()
     # snapshots rewrite FIRST: a crash between the two rewrites then
     # fails SAFE — the expired snapshot ids are already gone (readers
     # get 'unknown snapshot_id', never a silently-partial time travel),
@@ -384,18 +328,8 @@ def expire_snapshots(
     # surviving snapshot's per-bucket winner is unchanged by older rows.
     # The reverse order would leave expired snapshots readable over
     # already-pruned entries = silently empty/wrong content.
-    _swap_rewrite(
-        spark,
-        [tuple(r[f] for f in snap_fields) for r in kept],
-        snaps_df.schema,
-        _snapshots_path(manifest_path),
-    )
-    _swap_rewrite(
-        spark,
-        [tuple(r[f] for f in entry_fields) for r in live_entries],
-        entries_df.schema,
-        _entries_path(manifest_path),
-    )
+    _swap_rewrite(spark, kept, snaps_df.schema, _snapshots_path(manifest_path))
+    _swap_rewrite(spark, live_entries, entries_df.schema, _entries_path(manifest_path))
 
     # reclaim EXACTLY the runs this expiry unreferenced (was-referenced
     # minus still-referenced) — never a blanket orphan sweep, so an
@@ -438,17 +372,14 @@ def vacuum(
     single-writer maintenance windows)."""
     import os
 
-    try:
+    entries = _entries_path(manifest_path)
+    referenced = set()  # no manifest yet: everything is orphan-free
+    if _manifest_exists(spark, entries):
         referenced = {
             r["run_id"]
-            for r in _read_manifest(spark, _entries_path(manifest_path))
-            .select("run_id")
-            .distinct()
-            .collect()
+            for r in _read_manifest(spark, entries).select("run_id").distinct().collect()
         }
-    except AnalysisException:  # no manifest yet: everything is orphan-free
-        referenced = set()
-    # any OTHER failure (corrupt footer, transient FS/Py4J error,
+    # any read failure (corrupt footer, transient FS/Py4J error,
     # permissions) must ABORT the vacuum: proceeding with an empty
     # referenced set would make every committed run look unreferenced
     # and delete live data from a cleanup command
@@ -491,16 +422,8 @@ def run_pipeline_mvcc(
     before the manifest commit — the run directory becomes an orphan
     that readers never see and ``vacuum`` removes.
     """
-    # "r" prefix: a bare hex id like "8463e2231577" parses as a DOUBLE
-    # in scientific notation, and when EVERY run_id= directory name is
-    # number-parseable, partition-type inference flips the column to
-    # DOUBLE and string comparisons throw under ANSI (observed flake)
-    run_id = "r" + uuid.uuid4().hex[:11]
-    t0 = time.time()
-
-    raw = with_bucket(spark.read.parquet(input_path), n_buckets)
-    parent_snapshot = latest_snapshot_id(spark, manifest_path)
-    done = set(completed_buckets(spark, manifest_path))
+    run = RunCommit(spark, output_path, manifest_path, run_partition=True)
+    done = run.done
     redo = set(reprocess_buckets or ())
     skip = (done - redo) | set(fail_buckets or ())
     if repo_min_keep_bp is not None and skip:
@@ -514,70 +437,19 @@ def run_pipeline_mvcc(
             "run: this invocation skips committed buckets, so the "
             "per-repo rollup would see a biased subset"
         )
-    todo = raw.filter(~F.col("bucket").isin(list(skip))) if skip else raw
+    raw = with_bucket(spark.read.parquet(input_path), n_buckets)
+    todo = raw.filter(~F.col("bucket").isin(sorted(skip))) if skip else raw
 
     result = run_stages(
         todo, spark, near_dup=near_dup, bench_hashes=bench_hashes,
         span_dedup_bp=span_dedup_bp, cdc_dup_bp=cdc_dup_bp,
         repo_min_keep_bp=repo_min_keep_bp,
     ).select("bucket", *OUTPUT_COLS)
-    observation, result = attach_lineage_observation(result, run_id)
-    # IMMUTABLE write: append under this run's partition — never touches
-    # other runs' files, so no overwrite mode gymnastics and no torn
-    # reads for concurrent manifest-resolved readers
-    (
-        result.withColumn("run_id", F.lit(run_id))
-        .sortWithinPartitions("bucket", "repo", "path")
-        .write.partitionBy("run_id", "bucket")
-        .mode("append")
-        .parquet(output_path)
-    )
+    observation = run.write(result)
 
     if crash_before_commit:
-        raise RuntimeError(f"injected crash after write, before commit (run {run_id})")
+        raise RuntimeError(f"injected crash after write, before commit (run {run.run_id})")
 
-    new_buckets = sorted(
-        (set(range(n_buckets)) - skip) if skip else set(range(n_buckets))
-    )
-    written_new = spark.read.parquet(output_path).filter(
-        (F.col("run_id") == run_id) & F.col("bucket").isin(new_buckets)
-    )
-    commit_bucket_metrics(
-        spark, observation, written_new, new_buckets, run_id, t0, manifest_path
-    )
-
-    totals = (
-        _latest_manifest_rows(spark, manifest_path)
-        .agg(F.sum("rows").alias("rows"), F.sum("kept").alias("kept"))
-        .collect()[0]
-    )
+    new_buckets = sorted(set(range(n_buckets)) - skip)
     operation = "append" if not done else ("backfill" if redo else "append-resume")
-    snapshot = spark.createDataFrame(
-        [
-            (
-                run_id,
-                parent_snapshot,
-                operation,
-                len(new_buckets),
-                len(skip),
-                int(totals["rows"] or 0),
-                int(totals["kept"] or 0),
-                float(time.time()),
-            )
-        ],
-        "snapshot_id string, parent_snapshot_id string, operation string, "
-        "buckets_processed int, buckets_skipped int, rows_total long, "
-        "rows_kept long, committed_at double",
-    )
-    snapshot.write.mode("append").parquet(_snapshots_path(manifest_path))
-
-    return {
-        "run_id": run_id,
-        "snapshot_id": run_id,
-        "operation": operation,
-        "buckets_processed": len(new_buckets),
-        "buckets_skipped": len(skip),
-        "rows_total": int(totals["rows"] or 0),
-        "rows_kept": int(totals["kept"] or 0),
-        "elapsed_sec": time.time() - t0,
-    }
+    return run.commit(observation, new_buckets, operation, len(skip))

@@ -257,6 +257,7 @@ def test_connected_components_deep_chain_logarithmic(spark):
 
     d = n - 1
     bound = 2 * math.log2(d) + 3
+    assert stats["driver_solve"] is False
     assert stats["rounds"] <= bound, (stats, bound)
     assert stats["peak_checkpoint_rdds"] <= 4, stats
 
@@ -615,37 +616,43 @@ def test_exact_substring_random_differential(spark):
 def test_connected_components_driver_solve_matches_loop(spark):
     """The small-graph driver union-find fast path must be output-
     identical to the distributed min-label loop — same clusters, same
-    canonical members, dangling ids and null endpoints included."""
+    canonical members, dangling ids and null endpoints included. bigint
+    ids sit above 2^53, where a float64 round trip would merge them."""
     from data_curator_spark.operators.dedup import connected_components
 
-    verts = spark.createDataFrame(
-        [(f"v{i:02d}",) for i in range(20)], "doc_id string"
-    )
-    pairs = spark.createDataFrame(
-        # two chains, one clique edge set, a dangling id, a null end
-        [("v01", "v02"), ("v02", "v03"), ("v07", "v08"),
-         ("v10", "v11"), ("v11", "v12"), ("v10", "v12"),
-         ("v15", "zz-dangling"), ("v16", "zz-dangling"),
-         ("v18", None)],
-        "id_a string, id_b string",
-    )
-
-    def run(cap):
-        return sorted(
-            (r["doc_id"], r["cluster_id"], r["is_canonical"])
-            for r in connected_components(
-                verts, pairs, "doc_id", driver_solve_edge_cap=cap
-            ).collect()
+    for id_type, vid, dangling in (
+        ("string", lambda i: f"v{i:02d}", "zz-dangling"),
+        ("bigint", lambda i: 2**62 + i, 2**62 + 99),
+    ):
+        verts = spark.createDataFrame(
+            [(vid(i),) for i in range(20)], f"doc_id {id_type}"
+        )
+        pairs = spark.createDataFrame(
+            # two chains, one clique edge set, a dangling id, a null end
+            [(vid(1), vid(2)), (vid(2), vid(3)), (vid(7), vid(8)),
+             (vid(10), vid(11)), (vid(11), vid(12)), (vid(10), vid(12)),
+             (vid(15), dangling), (vid(16), dangling),
+             (vid(18), None)],
+            f"id_a {id_type}, id_b {id_type}",
         )
 
-    fast = run(1_000_000)
-    loop = run(0)
-    assert fast == loop
-    stats_fast: dict = {}
-    connected_components(
-        verts, pairs, "doc_id", stats=stats_fast
-    ).collect()
-    assert stats_fast["rounds"] == 0  # proves the fast path actually ran
+        def run(cap):
+            return sorted(
+                (r["doc_id"], r["cluster_id"], r["is_canonical"])
+                for r in connected_components(
+                    verts, pairs, "doc_id", driver_solve_edge_cap=cap
+                ).collect()
+            )
+
+        fast = run(1_000_000)
+        loop = run(0)
+        assert fast == loop, id_type
+        stats_fast: dict = {}
+        connected_components(
+            verts, pairs, "doc_id", stats=stats_fast
+        ).collect()
+        assert stats_fast["driver_solve"] is True  # the fast path actually ran
+        assert stats_fast["rounds"] == 0
 
 
 def test_minhash_arrow_matches_expression_path(spark):

@@ -29,6 +29,22 @@ def _sha_set(df):
     return {r["sha256_original"] for r in df.select("sha256_original").collect()}
 
 
+def _assert_totals_match_table(spark, out, man, res):
+    """The run's snapshot totals (parent state + its own buckets) equal a
+    full re-read of the current table."""
+    from data_curator_spark.pipeline.runner import snapshot_lineage
+
+    t = read_current(spark, out, man).agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.col("keep").cast("long")).alias("k")
+    ).first()
+    want = (int(t["n"]), int(t["k"] or 0))
+    snap = snapshot_lineage(spark, man).filter(
+        F.col("snapshot_id") == res["snapshot_id"]
+    ).first()
+    assert (snap["rows_total"], snap["rows_kept"]) == want
+    assert (res["rows_total"], res["rows_kept"]) == want
+
+
 def test_resume_backfill_time_travel_and_vacuum(spark, corpus, tmp_path):
     out = str(tmp_path / "out")
     man = str(tmp_path / "man")
@@ -66,6 +82,7 @@ def test_resume_backfill_time_travel_and_vacuum(spark, corpus, tmp_path):
     # run 3: BACKFILL bucket 0 under a new run id
     r3 = run_pipeline_mvcc(spark, corpus, out, man, n_buckets=4, reprocess_buckets={0})
     assert r3["operation"] == "backfill"
+    _assert_totals_match_table(spark, out, man, r3)
     cur3 = read_current(spark, out, man)
     # same logical content (the pipeline is deterministic)…
     assert _sha_set(cur3) == _sha_set(cur2)
@@ -210,6 +227,13 @@ def test_compact_and_expire_snapshots(spark, corpus, tmp_path):
     before_multiset = _multiset(before_rows)
     c = compact(spark, out, man)
     assert c["operation"] == "compact" and c["runs_compacted"] == 3
+    _assert_totals_match_table(spark, out, man, c)
+    # compaction leaves one file per bucket
+    run_dir = os.path.join(out, f"run_id={c['run_id']}")
+    for d in os.listdir(run_dir):
+        if d.startswith("bucket="):
+            files = [f for f in os.listdir(os.path.join(run_dir, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, (d, files)
 
     cur = read_current(spark, out, man)
     # one physical run backs the whole live table now

@@ -23,6 +23,15 @@ def corpus_path(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def sharded_corpus_path(spark, corpus_path, tmp_path_factory):
+    """The corpus in 4 files, so the scan runs as several tasks and every
+    task holds rows of most buckets."""
+    d = str(tmp_path_factory.mktemp("sharded") / "corpus")
+    spark.read.parquet(corpus_path).repartition(4).write.parquet(d)
+    return d
+
+
+@pytest.fixture(scope="module")
 def labels():
     return label_corpus(generate_corpus(N_FILES, SEED))
 
@@ -126,7 +135,23 @@ def test_salted_buckets_defuse_mega_repo(spark, corpus_path):
     assert n_buckets_used == 16  # and it spreads over every bucket
 
 
-def test_resume_from_manifest(spark, corpus_path, tmp_path):
+def _table_totals(df):
+    """(rows, kept) of a full re-read of a table."""
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("keep").cast("long")).alias("k")).first()
+    return int(r["n"]), int(r["k"] or 0)
+
+
+def _snapshot_totals(spark, manifest, snapshot_id):
+    from data_curator_spark.pipeline.runner import snapshot_lineage
+
+    s = snapshot_lineage(spark, manifest).filter(F.col("snapshot_id") == snapshot_id).first()
+    return s["rows_total"], s["rows_kept"]
+
+
+def test_resume_from_manifest(spark, sharded_corpus_path, tmp_path):
+    import os
+
+    corpus_path = sharded_corpus_path
     out_dir = str(tmp_path / "out")
     manifest = str(tmp_path / "manifest")
     # first run "crashes" with 4 buckets unprocessed
@@ -134,6 +159,11 @@ def test_resume_from_manifest(spark, corpus_path, tmp_path):
         spark, corpus_path, out_dir, manifest, n_buckets=8, fail_buckets={5, 6, 7, 2}
     )
     assert r1["buckets_processed"] == 4
+    # snapshot totals (parent state + this run's buckets) equal a full
+    # re-read of the table, after the crash and after the resume
+    crashed = _table_totals(spark.read.parquet(out_dir))
+    assert (r1["rows_total"], r1["rows_kept"]) == crashed
+    assert _snapshot_totals(spark, manifest, r1["run_id"]) == crashed
     # resume: only the missing buckets run
     r2 = run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=8)
     assert r2["buckets_skipped"] == 4
@@ -143,6 +173,39 @@ def test_resume_from_manifest(spark, corpus_path, tmp_path):
     assert r2["rows_total"] == total_rows
     written = spark.read.parquet(out_dir)
     assert written.groupBy("repo", "path", "commit").count().filter("count > 1").isEmpty()
+    resumed = _table_totals(written)
+    assert resumed[0] == total_rows and resumed != crashed
+    assert (r2["rows_total"], r2["rows_kept"]) == resumed
+    assert _snapshot_totals(spark, manifest, r2["run_id"]) == resumed
+    # the write is clustered by bucket: one task, so one file, per bucket,
+    # although each of the 4 scan tasks held rows of most buckets
+    for d in sorted(os.listdir(out_dir)):
+        if d.startswith("bucket="):
+            files = [f for f in os.listdir(os.path.join(out_dir, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, (d, files)
+
+
+def test_run_pipeline_job_count(spark, corpus_path, tmp_path):
+    """CI guard on the commit path's Spark jobs. A fresh run: input schema,
+    stage chain + rebalance, write, gate re-read (2), entry append,
+    snapshot append. A resume adds the run's one manifest read: the
+    latest snapshot and the latest entry per bucket (2). An added
+    manifest round-trip fails this test."""
+    sc = spark.sparkContext
+    out_dir = str(tmp_path / "out")
+    manifest = str(tmp_path / "manifest")
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            run_pipeline(spark, corpus_path, out_dir, manifest, n_buckets=8, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("job-count-fresh", fail_buckets={3}) == 7
+    assert jobs("job-count-resume") == 10
 
 
 def test_model_separation():
@@ -154,6 +217,9 @@ def test_model_separation():
     rng = np.random.default_rng(99)
     model = build_langid_model()
     lm = build_bigram_lm()
+    # trained once per seed; the shared instance's arrays are read-only
+    assert build_langid_model() is model and build_bigram_lm() is lm
+    assert not (model.weights.flags.writeable or lm.logp.flags.writeable)
     docs, want = [], []
     for lang in LANGS:
         for _ in range(10):
